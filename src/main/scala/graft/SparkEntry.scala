@@ -591,9 +591,9 @@ object SparkEntry {
       .orderBy("o_orderpriority", "p")
   }
 
-  /** Near-dup cluster assignment: connected components (min-label
-    * propagation) over the q18 LSH candidate graph — oracled against a
-    * DuckDB recursive-CTE transitive closure. */
+  /** Near-dup cluster assignment: connected components (min-id labels)
+    * over the q18 LSH candidate graph — oracled against a DuckDB
+    * recursive-CTE transitive closure. */
   private def q39(s: SparkSession, dir: String): DataFrame =
     graft.ops.Dedup.dupClusters(
       Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
@@ -1236,22 +1236,10 @@ object SparkEntry {
       lookbackNanos = 7L * 24 * 3600 * 1000000000L)
 
   /** PageRank (10 rounds, d=0.85, integer picorank fixed point) over the
-    * symmetrized customer–supplier trade graph from orders⋈lineitem.
-    *
-    * Parameter choice (r10 + r11, closing the q84-floor verdict items):
-    * `copartition = false, checkpointEvery = 1` is the measured-fastest
-    * bench shape — PageRankProbe's interleaved same-JVM sweeps put the
-    * library defaults at 6.03 s median vs 5.03 (ckpt2) / 4.90 (ckpt1)
-    * without the setup repartitions, the n-gated broadcast hint
-    * (default-on in [[graft.ops.Graph.pageRank]]) worth another ~1.3 s
-    * under that cadence, and the r11 sweep landing AQE-off-while-pinned
-    * (now pageRank's default once the hint fires) at 4.32 s (ckpt1) /
-    * 4.51 (ckpt2) vs 5.46 with AQE re-planning each round. The 16k-node
-    * trade graph sits squarely in the broadcast regime where the
-    * co-partition setup exchanges are pure overhead; a caller ranking a
-    * past-the-broadcast-gate graph keeps the library defaults, where
-    * co-partitioning saves a full edge re-shuffle per round and AQE
-    * keeps its scale duties. */
+    * symmetrized customer–supplier trade graph from orders⋈lineitem. The
+    * graph is far inside pageRank's node gate, so the ranks stay on the
+    * driver: one edge checkpoint, one degree pass and one job per round
+    * (the benchmark's `q84.construction.jobs` trace counts them). */
   private def q84(s: SparkSession, dir: String): DataFrame = {
     val pairs = t(s, dir, "orders")
       .join(t(s, dir, "lineitem"),
@@ -1261,22 +1249,12 @@ object SparkEntry {
       .distinct()
     // symmetrize with ONE explode, not union(pairs, pairs.reversed): the
     // union form evaluates the orders⋈lineitem+distinct subtree TWICE
-    // (the two legs' aliases differ, so no exchange reuse) — measured ~1 s
-    // of q84's setup at sf0.1
+    // (the two legs' aliases differ, so no exchange reuse)
     graft.ops.Graph.pageRank(
       pairs.select(explode(array(
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      copartition = false, checkpointEvery = 1,
-      // r17: dst-keyed broadcast-regime loop — zero exchanges between
-      // round checkpoints (GraphSpec pins the plan), AQE scoped off for
-      // the loop at any width (nothing left to coalesce). PageRankProbe
-      // same-JVM interleaved sweeps: 4.79 vs 5.82 s median at sp=32
-      // (warm tail 4.67 vs 5.82), 4.91 vs 5.08 at sp=8 — the r16
-      // shipping shape loses at both widths; copartition=true re-swept
-      // at 8.94–9.22 s (verdict item 1's re-measure, negative again).
-      dstPartitionLoop = true)
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
   }
 
   /** Compaction planning: documents as stand-in file metadata (size =

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale text corpora (BASELINE.json
   * north-star: LLM-training-data pipeline ops beyond the reference surface).
@@ -2109,23 +2112,30 @@ object Dedup {
     * canonical keep-one-per-cluster key that per-pair output cannot give
     * when duplicates chain (a≈b, b≈c, a!≈c).
     *
-    * Iterative min-label propagation with pointer jumping: each round
-    * every node takes the min of its own, its neighbors', and its label's
-    * label (shortcutting) — the jump makes convergence O(log n) rounds
-    * even for a worst-case duplicate CHAIN (plain propagation needs
-    * O(diameter) rounds, which a long chain would exhaust). Each round is
-    * two joins + one aggregate, all on node keys; `localCheckpoint`
-    * truncates the lineage so the plan stays flat across iterations. The
-    * driver loop carries only a scalar per round (the change count), never
-    * data. */
+    * The pairs are symmetrized into an edge checkpoint once. One capped
+    * pass over it then both counts the nodes n and, when n is within
+    * `broadcastLabelsMaxNodes` (2M by default), labels them:
+    *   - In the gate, each task builds a union-find over its edges that
+    *     always keeps the smaller id as the root, and the tasks' forests
+    *     merge tree-wise, so each root is its component's minimum id. The
+    *     whole operator is the edge checkpoint plus this one job. Driver
+    *     memory is O(n) ≤ gate entries, the envelope a broadcast label
+    *     frame of the same size needs; a task stops reading once its forest
+    *     passes the gate.
+    *   - Past the gate, iterative min-label propagation with pointer
+    *     jumping over the edges re-keyed by dst: each round every node takes
+    *     the min of its own, its neighbors', and its label's label — the
+    *     jump makes convergence O(log n) rounds even for a worst-case
+    *     duplicate CHAIN. Each round is two joins + one aggregate on node
+    *     keys, and only the n-row label side shuffles. `maxIter` bounds the
+    *     rounds; missing the fixpoint fails loudly.
+    * Both regimes agree on null ids: an edge with a null end links nothing,
+    * and the null node is labeled null. The row order is unspecified. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
                   broadcastLabelsMaxNodes: Long = 2000000L): DataFrame = {
     // symmetrize with ONE explode, not union(pairs, pairs.reversed): the
     // union form evaluates the whole upstream pair pipeline TWICE (the
-    // two legs' aliases differ, so no exchange reuse — the same finding
-    // as q84's edge symmetrization; for q39 the upstream is the full
-    // LSH band+verify pipeline, so the duplicate evaluation dominated
-    // the setup). r17: measured on q39 — see OPTIMIZATION_r17.md.
+    // two legs' aliases differ, so no exchange reuse)
     val edges = pairs
       .select(explode(array(
         struct(col("id_a").cast("long").as("src"),
@@ -2134,49 +2144,41 @@ object Dedup {
           col("id_a").cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
+    val forest = Graph.foldEdges(edges,
+        () => new MinForest(broadcastLabelsMaxNodes)) {
+      (f, row) =>
+        f.add(row)
+        !f.overflow
+    }(_ merge _)
+    val n = forest.parent.size + (if (forest.hasNull) 1L else 0L)
+    if (forest.overflow || n > broadcastLabelsMaxNodes)
+      labelPropagation(Graph.rekey(edges, "dst"), maxIter)
+    else {
+      val ids = forest.parent.keys.toArray.sorted
+      val nullable = edges.schema("src").nullable
+      Graph.sortedPairsFrame(edges.sparkSession,
+        StructType(Seq(StructField("id", LongType, nullable),
+          StructField("cluster", LongType, nullable))),
+        ids, ids.map(forest.root), Option.when(forest.hasNull)(Row(null, null)))
+    }
+  }
+
+  /** Past-gate [[dupClusters]] rounds over symmetric `edges` keyed by dst. */
+  private def labelPropagation(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint()
-    // the pageRank recipe (r10) transferred to the sibling iterative op:
-    // the node count is MEASURED off the eager setup checkpoint (cheap —
-    // and only docs WITH near-dup pairs are nodes here, a small set even
-    // on corpora where most docs are unique), so in the broadcast regime
-    // every per-round lookup side gets the explicit hint instead of
-    // waiting on AQE's per-stage runtime stats; past the gate the hint is
-    // withheld and the exchange path serves (a corpus-sized label frame
-    // must never collect to the driver).
-    val hintLabels = labels.count() <= broadcastLabelsMaxNodes
-    // past the broadcast gate, every round's neighbor-min join would
-    // re-shuffle the EDGE table — the corpus-mass side — by dst while
-    // only the n-row label side actually changes per round. Pin edges
-    // to hashpartitioning(dst) ONCE (r17 — the pageRank copartition
-    // recipe, including its AQE-scoped checkpoint: a plain
-    // localCheckpoint under AQE captures UnknownPartitioning and the
-    // pin silently dies); each round then shuffles labels only.
-    // In-gate (the bench regime) the broadcast join needs no edge
-    // distribution, so the extra setup exchange is skipped entirely.
-    val eJoin =
-      if (hintLabels) edges
-      else graft.ops.Graph.checkpointKeepingPartitioning(
-        edges.repartition(
-          edges.sparkSession.sessionState.conf.numShufflePartitions,
-          col("dst")))
-    def lookup(df: DataFrame): DataFrame =
-      if (hintLabels) df.hint("BROADCAST") else df
     var labelSum: Option[Long] = None
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val neighborMin = eJoin
-        .join(lookup(labels.select(col("id").as("dst"),
-          col("label").as("nlabel"))), "dst")
+      val neighborMin = edges
+        .join(labels.select(col("id").as("dst"), col("label").as("nlabel")),
+          "dst")
         .groupBy(col("src").as("id")).agg(min("nlabel").as("nmin"))
-      // LAZY checkpoint (r17): the pointer-jump join below consumes
-      // `propagated` on BOTH sides, and Spark plans the two references
-      // as independent subtrees — without a cut, the neighbor-min join +
-      // aggregate ran TWICE per round. The lazy checkpoint materializes
-      // on first use (the jump's lookup side — under the broadcast hint
-      // that build job runs first, then the streamed side reads the
-      // cached RDD) and adds NO extra job.
+      // LAZY checkpoint: the pointer-jump join below reads `propagated` on
+      // BOTH sides, which Spark plans as independent subtrees; the cut keeps
+      // the neighbor-min join + aggregate from running twice per round, and
+      // the lazy form adds no job (the first consumer materializes it)
       val propagated = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
@@ -2184,17 +2186,15 @@ object Dedup {
       // pointer jump: follow my label to ITS label (labels are node ids,
       // so the lookup table is the label frame itself)
       val updated = propagated.alias("a")
-        .join(lookup(propagated.select(col("id").as("label"),
-          col("label").as("plabel"))).alias("p"), Seq("label"), "left")
+        .join(propagated.select(col("id").as("label"),
+          col("label").as("plabel")).alias("p"), Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("plabel"), col("label"))).as("label"))
         // LAZY checkpoint: the convergence aggregate right below is the
-        // round's one action and materializes it — an eager checkpoint
-        // would run a second, redundant job per round
+        // round's one action and materializes it
         .localCheckpoint(false)
       // labels are monotonically non-increasing, so the label sum strictly
-      // decreases until the fixpoint — equal sums ⟺ converged. One cheap
-      // aggregate instead of a per-round full join against the old labels.
+      // decreases until the fixpoint — equal sums ⟺ converged
       val sum = updated.agg(coalesce(
         org.apache.spark.sql.functions.sum("label"), lit(0L)))
         .collect()(0).getLong(0)
@@ -2325,5 +2325,59 @@ object Dedup {
       .filter(col("id_a") < col("id_b") && col("hamming") <= maxDist)
       .dropDuplicates("id_a", "id_b")
     pairs
+  }
+}
+
+/** Union-find over long node ids whose root is always the smaller id, so
+  * each root is its component's minimum. `overflow` flags more than `cap`
+  * nodes; past it [[add]] stops growing the forest. */
+private[ops] final class MinForest(cap: Long) extends Serializable {
+  val parent: mutable.LongMap[Long] = mutable.LongMap.empty[Long]
+  var hasNull = false
+  var overflow = false
+
+  def root(a: Long): Long = {
+    var x = a
+    var p = parent(x)
+    while (p != x) { // path halving
+      val g = parent(p)
+      parent(x) = g
+      x = g
+      p = parent(x)
+    }
+    x
+  }
+
+  private def node(x: Long): Unit =
+    if (!parent.contains(x)) {
+      parent(x) = x
+      overflow = parent.size > cap
+    }
+
+  private def union(a: Long, b: Long): Unit = {
+    node(a); node(b)
+    val ra = root(a)
+    val rb = root(b)
+    if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+  }
+
+  /** Adds the edge (src, dst) of `row`. A null end links nothing (the
+    * other end is still a node), and marks the null node present. */
+  def add(row: InternalRow): Unit =
+    if (!overflow) {
+      val srcNull = row.isNullAt(0)
+      val dstNull = row.isNullAt(1)
+      if (srcNull || dstNull) {
+        hasNull = true
+        if (!srcNull) node(row.getLong(0))
+        if (!dstNull) node(row.getLong(1))
+      } else union(row.getLong(0), row.getLong(1))
+    }
+
+  def merge(o: MinForest): MinForest = {
+    hasNull ||= o.hasNull
+    overflow ||= o.overflow
+    o.parent.foreachEntry((x, p) => if (!overflow) union(x, p))
+    this
   }
 }

@@ -1,22 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed PageRank over an edge list — the iterative-join workload
-  * class (label propagation's spectral sibling; dupClusters covers the
-  * other one). North-star extension in the SURVEY §8 sense.
-  *
-  * Scale shape: each iteration is ONE join of the rank frame against the
-  * edge list on the source key plus ONE aggregate on the destination key
-  * (the per-node degree rides through the same aggregate as a max over a
-  * union'd zero-contribution row per node, so no second join reattaches
-  * it) — both hash-partitioned, no windows, no driver data. `localCheckpoint`
-  * truncates lineage per round so the plan never grows with the iteration
-  * count (same discipline as [[Dedup.dupClusters]]). The driver loop
-  * carries nothing but the iteration counter. Degrees are carried INSIDE
-  * the rank frame (node, deg, rank), so the static degree table is not
-  * re-joined every round.
+  * class ([[Dedup.dupClusters]] covers the label-propagation one).
   *
   * Fixed-point arithmetic (the oracle contract): ranks live as integer
   * "picorank" units (initial mass = 10¹² DIV n per node) and every
@@ -36,193 +29,112 @@ import org.apache.spark.sql.functions._
   * Update rule per round, damping d = `dampingPct`/100:
   *   contrib(v) = Σ_{u→v} rank(u) DIV deg(u)
   *   rank'(v)   = ((100−d)·(10¹² DIV n)) DIV 100 + (d·contrib(v)) DIV 100
+  *
+  * Two regimes, split by the node count n against `broadcastRanksMaxNodes`
+  * (2M by default). The edges are checkpointed once, and one capped pass
+  * over that checkpoint builds the node → out-degree map; a task stops
+  * reading once its map passes the gate, so the pass is cheap either way.
+  *   - In the gate, the rank vector lives on the driver. Each round
+  *     broadcasts `rank DIV deg` per node and runs ONE job over the edge
+  *     checkpoint that returns per-destination contribution sums (a task's
+  *     result is bounded by its distinct destinations); the driver applies
+  *     the update. A call is the edge checkpoint, the degree pass and one
+  *     job per round, with no per-round plan and no session-conf change.
+  *     Driver memory is O(n) ≤ gate entries, the envelope a broadcast rank
+  *     frame of the same size needs.
+  *   - Past the gate, the DataFrame loop: edges are re-keyed by src and the
+  *     degree table by node once, in checkpoints that keep their hash
+  *     partitioning, so each round's rank⋈edges join is co-partitioned and
+  *     the contrib aggregate (contributions regroup by destination) is the
+  *     only per-round exchange. Lineage is cut every [[CheckpointEvery]]
+  *     rounds.
+  * Both regimes return (node, rank) ascending by node and treat a null
+  * endpoint alike: the null node is ranked and receives contributions,
+  * but never sends any (a null src joins nothing).
   */
 object Graph {
 
   val Unit: Long = 1000000000000L // 10^12 picorank = total initial mass
 
-  /** Session shuffle-partition bound under which the in-gate (broadcast-
-    * pinned) loop runs with AQE scoped off — above it, AQE's coalescing
-    * of the per-round aggregate exchange outweighs its re-planning cost
-    * (both sides measured by PageRankProbe; see the scope note in
-    * [[pageRank]]). */
-  val AqeOffMaxLoopPartitions: Int = 16
+  /** Past-gate rounds per lineage cut: each eager checkpoint is a full
+    * rank-frame materialization, while a few rounds of plan stay cheap to
+    * optimize. */
+  private val CheckpointEvery = 5
 
   /** PageRank over directed `edges` (src, dst). Nodes = every endpoint.
-    * Returns (node, rank) with rank in picorank units, sorted by node. */
-  def pageRank(edges: DataFrame, iterations: Int = 10,
-               dampingPct: Int = 85, checkpoint: Boolean = true,
-               checkpointEvery: Int = 5, copartition: Boolean = true,
-               eagerCheckpoint: Boolean = true,
-               broadcastRanksMaxNodes: Long = 2000000L,
-               adaptiveWhilePinned: Boolean = false,
-               dstPartitionLoop: Boolean = false): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    // pin BOTH static frames to one hash partitioning up front — edges on
-    // src, nodes on node — and every later checkpoint preserves it
-    // (LogicalRDD carries outputPartitioning). Each iteration's rank⋈edges
-    // join (node = src) is then co-partitioned, so at scale (where AQE
-    // can't just broadcast the rank frame) EnsureRequirements re-shuffles
-    // NEITHER side per round — the only per-round exchange is the contrib
-    // aggregate's, genuinely required (contributions regroup by
-    // destination). INSIDE the broadcast regime, though, the setup
-    // repartitions + their checkpoints are pure overhead: the r10
-    // PageRankProbe sweep (interleaved same-JVM legs at the bench shape)
-    // measured copartition = false consistently faster at sf0.1 (5.93 vs
-    // 6.76 s median, every rep), superseding the r6 "equal ±1 s" note.
-    // The default stays TRUE — the scale regime this parameter exists for
-    // is exactly the one where it saves a full edge re-shuffle per round —
-    // and small-graph callers (q84) pass false with the measurement cited.
-    // r17 CORRECTION to the r6 claim above: under AQE the checkpoint
-    // does NOT carry the hash partitioning — localCheckpoint captures
-    // `executedPlan.outputPartitioning`, and with AQE enabled that plan
-    // is an AdaptiveSparkPlanExec, which never overrides
-    // outputPartitioning (UnknownPartitioning) — so every "pinned"
-    // checkpoint silently degraded to unknown and the loop re-shuffled
-    // anyway (the r10/r11 probes that validated the pin all ran inside
-    // the AQE-off scope, where the capture works). Partitioned setup
-    // checkpoints therefore materialize under a SCOPED AQE-off
-    // ([[checkpointKeepingPartitioning]]) — the one-time setup jobs are
-    // plain shuffles AQE had nothing to improve, and the captured
-    // hashpartitioning is what every round's EnsureRequirements needs.
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    // dstPartitionLoop callers key the ONE edge checkpoint by dst up
-    // front (r17) instead of re-checkpointing a second copy after the
-    // broadcast gate resolves — one materialization job saved per call.
-    // If the gate then FAILS (rare for callers that request the flag),
-    // the legacy loop treats a dst-keyed e exactly like the
-    // copartition=false unpartitioned e it would have had: neither
-    // satisfies the join's src-keyed requirement, so behavior and cost
-    // are unchanged in that fallback.
-    // dst keying takes PRECEDENCE over copartition's src keying when
-    // both are requested: dstPartitionLoop declares broadcast-regime
-    // intent, and a caller at past-the-gate scale should not pass it
-    // (the scaladoc says so) — if the gate still fails, the legacy loop
-    // runs with a dst-keyed e, which costs the same per-round join
-    // shuffle as the copartition=false shape.
-    val e =
-      if (dstPartitionLoop)
-        checkpointKeepingPartitioning(e0.repartition(parts, col("dst")))
-      else if (copartition)
-        checkpointKeepingPartitioning(e0.repartition(parts, col("src")))
-      else e0.localCheckpoint()
+    * Returns (node, rank) with rank in picorank units, sorted by node.
+    * `checkpoint = false` keeps the past-gate loop's whole lineage (for
+    * plan audits). */
+  def pageRank(edges: DataFrame, iterations: Int = 10, dampingPct: Int = 85,
+               checkpoint: Boolean = true,
+               broadcastRanksMaxNodes: Long = 2000000L): DataFrame = {
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .localCheckpoint()
+    val deg = foldEdges(e, () => new KeySums(broadcastRanksMaxNodes)) {
+      (acc, row) =>
+        acc.add(row, 0, 1L) // one out-edge of src
+        acc.add(row, 1, 0L) // dst is a node, even as a sink
+        !acc.overflow
+    }(_ merge _)
+    val n = deg.sums.size + (if (deg.hasNull) 1L else 0L)
+    require(deg.overflow || n > 0, "pageRank needs a non-empty graph")
+    if (deg.overflow || n > broadcastRanksMaxNodes)
+      pageRankLoop(rekey(e, "src"), iterations, dampingPct, checkpoint)
+    else pageRankOnDriver(e, deg, n, iterations, dampingPct)
+  }
+
+  /** The in-gate rounds: ranks in driver arrays, one edge job per round. */
+  private def pageRankOnDriver(e: DataFrame, deg: KeySums, n: Long,
+                               iterations: Int, dampingPct: Int): DataFrame = {
+    val sess = e.sparkSession
+    val ids = deg.sums.keys.toArray.sorted
+    val outDeg = ids.map(deg.sums)
+    val init = Unit / n
+    val base = ((100L - dampingPct) * init) / 100L
+    var rank = Array.fill(ids.length)(init)
+    var nullRank = init
+    for (_ <- 1 to iterations) {
+      val share = mutable.LongMap.empty[Long]
+      for (i <- ids.indices if outDeg(i) > 0) share(ids(i)) = rank(i) / outDeg(i)
+      val bShare = sess.sparkContext.broadcast(share)
+      val contrib = foldEdges(e, () => new KeySums(Long.MaxValue)) {
+        (acc, row) =>
+          if (!row.isNullAt(0)) acc.add(row, 1, bShare.value(row.getLong(0)))
+          true
+      }(_ merge _)
+      bShare.destroy()
+      rank = ids.map(v => base + (dampingPct * contrib.sums.getOrElse(v, 0L)) / 100L)
+      nullRank = base + (dampingPct * contrib.nullSum) / 100L
+    }
+    sortedPairsFrame(sess,
+      StructType(Seq(StructField("node", LongType, e.schema.exists(_.nullable)),
+        StructField("rank", LongType))),
+      ids, rank, Option.when(deg.hasNull)(Row(null, nullRank)))
+  }
+
+  /** The past-gate loop over `e` keyed by src. Each round is ONE join of the
+    * per-node share `rank DIV deg` (hoisted to the ≤ n-row rank side, as it
+    * is constant across a node's out-edges) against the edges, plus ONE
+    * aggregate on the destination that also carries each node's degree
+    * through a unioned zero-contribution row, so no second join reattaches
+    * it. */
+  private def pageRankLoop(e: DataFrame, iterations: Int, dampingPct: Int,
+                           checkpoint: Boolean): DataFrame = {
+    val parts = e.sparkSession.sessionState.conf.numShufflePartitions
     // nodes + out-degrees in ONE shuffle: explode each edge into its two
-    // endpoints with a source marker and sum the markers per node — the
-    // former distinct ∪ degree-agg ∪ left-join formulation paid three
-    // shuffles and a join for the same frame (measured ~1 s of setup at
-    // sf0.1; at scale it is two full edge shuffles saved)
-    val nd0 = e.select(explode(array(
+    // endpoints with a source marker and sum the markers per node
+    val nodesDeg = checkpointKeepingPartitioning(e.select(explode(array(
         struct(col("src").as("node"), lit(1L).as("d")),
         struct(col("dst").as("node"), lit(0L).as("d")))).as("x"))
       .groupBy(col("x.node").as("node"))
       .agg(sum(col("x.d")).as("deg"))
-    val nodesDeg =
-      if (copartition || dstPartitionLoop)
-        checkpointKeepingPartitioning(nd0.repartition(parts, col("node")))
-      else nd0.localCheckpoint()
-    val n = nodesDeg.count()
-    require(n > 0, "pageRank needs a non-empty graph")
-    // n is MEASURED before the loop, so the broadcast decision is
-    // scale-true: a rank frame of ≤ `broadcastRanksMaxNodes` rows (24 B
-    // packed each — ≤ ~48 MB at the 2M default) gets an explicit
-    // BROADCAST hint on the join's rank side, pinning the plan AQE would
-    // discover per round anyway without waiting on per-stage runtime
-    // stats; past the bound the hint is withheld and the co-partitioned
-    // exchange path serves (a billion-node graph must never collect its
-    // rank frame to the driver).
-    val hintBroadcastRanks = n <= broadcastRanksMaxNodes
-    // r17 (verdict item 1 — "no per-iteration exchange survives"): with
-    // the rank side BROADCAST, the per-round contrib aggregate is the
-    // loop's ONLY exchange, and it exists because the broadcast join's
-    // output inherits the STREAMED side's partitioning — edges. Keying
-    // the edge checkpoint by dst (the aggregate's key, alias-tracked
-    // through `dst AS node`) makes the aggregate exchange-free, and the
-    // rank' reattach becomes a co-partitioned SHUFFLE_HASH left join
-    // against the by-node nodesDeg checkpoint (same coalesce(contrib,0)
-    // arithmetic as the oracle's LEFT JOIN — the pre-r6 formulation,
-    // now without its exchanges): ZERO exchanges between checkpoints.
-    // One extra setup shuffle of the edge list pays for `iterations`
-    // removed aggregate exchanges + their AQE re-plans. Broadcast regime
-    // ONLY: past the gate the join needs e keyed by src (or both sides
-    // shuffled per round), so the flag is ignored there — the
-    // copartition-by-src path serves, where the contrib exchange is
-    // genuinely required (contributions regroup by destination).
-    // the setup above already keyed e by dst and nodesDeg by node when
-    // dstPartitionLoop was requested — the loop reads them directly
-    val dstLoop = dstPartitionLoop && hintBroadcastRanks
-    val eLoop = e
-    val ndLoop = nodesDeg
-    // With the broadcast hint pinned AND a small shuffle-partition count,
-    // AQE has nothing left to do per round — the join is pre-decided and
-    // there are no partitions worth coalescing — so its per-stage re-plan
-    // loop is pure driver overhead on exactly the floor the r10 jstack
-    // profile attributed (driver re-planning + janino, not tasks). The
-    // r11 PageRankProbe sweeps (interleaved same-JVM legs, 5 reps)
-    // measured BOTH gate sides: at the bench shape (sp=4) AQE off wins
-    // 4.51 vs 5.46 s (ckpt2) / 4.32 vs ~4.9 (ckpt1), while at sp=32 AQE
-    // ON wins 4.67 vs 4.89 / 4.86 vs 5.22 — there its aggregate-exchange
-    // coalescing pays for the re-planning. So the loop's materializations
-    // run with AQE DISABLED only when the plan is pinned and the session
-    // parallelism is at or under [[AqeOffMaxLoopPartitions]], scoped to
-    // this call and RESTORED after (the returned frame and the caller's
-    // session see the original setting; GraphSpec pins both — and the
-    // loop's `i == iterations` checkpoint clause guarantees EVERY round
-    // materializes inside the scope at any checkpointEvery, so no round's
-    // plan escapes to post-restore execution; the conf is session-global
-    // while the loop runs, the documented price of the scope). Past either
-    // gate AQE keeps its duties (skew splits, coalescing) — never touched.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val sess = edges.sparkSession
-    // dstLoop widens the scope past the partition gate: its loop has NO
-    // exchange at all between checkpoints, so AQE's per-stage re-plan
-    // has literally nothing to coalesce at any width (the sp=32 gate
-    // existed because the union+agg shape's exchange benefits from
-    // coalescing there).
-    val scopeAqeOff = hintBroadcastRanks && !adaptiveWhilePinned &&
-      (parts <= AqeOffMaxLoopPartitions || dstLoop) &&
-      checkpoint && eagerCheckpoint
-    // The scope mutates a SESSION-GLOBAL conf: concurrent queries on the
-    // same session lose AQE while the loop runs (documented, accepted for
-    // the single-driver bench context this gate targets), and WITHOUT
-    // serialization two concurrent pageRank calls could interleave their
-    // save/restore and leave AQE off permanently (r11 advice). The lock
-    // closes the race half; it serializes only scoped (small-graph)
-    // calls — past the gate nothing is touched and nothing locks.
-    def runLoop(): DataFrame = {
-    val init = Unit / n
+      .repartition(parts, col("node")))
+    val init = Unit / nodesDeg.count()
     val base = ((100L - dampingPct) * init) / 100L
     var ranks = nodesDeg.withColumn("rank", lit(init))
     for (i <- 1 to iterations) {
-      // ONE join + ONE aggregate per round: the per-edge contributions
-      // union a zero row per node carrying that node's degree, and a
-      // single groupBy(node) yields (Σ contrib, deg) together — folding
-      // the former "left-join contrib back onto nodesDeg" stage into the
-      // aggregate that already shuffles on node (one fewer join per
-      // round; same floor-DIV arithmetic, so the oracle is unchanged)
-      // per-node contribution rank DIV deg hoisted ABOVE the edge join
-      // (r17, guide §2.3): it is constant across a node's out-edges, so
-      // computing it on the ≤n-row rank side instead of per joined edge
-      // row saves |E|−n divisions per round and narrows the join input
-      val rankSide = {
-        val live = ranks.filter(col("deg") > 0)
-          .select(col("node"), expr("rank div deg").as("c"))
-        if (hintBroadcastRanks) live.hint("BROADCAST") else live
-      }
-      if (dstLoop) {
-        // zero-exchange round (see the dstLoop note above): the contrib
-        // aggregate rides eLoop's dst partitioning through the broadcast
-        // join, and the reattach is a co-partitioned hash join against
-        // the by-node degree checkpoint — LEFT join + coalesce is the
-        // oracle's own formulation, so the arithmetic is unchanged
-        val contrib = rankSide
-          .join(eLoop, rankSide("node") === eLoop("src"))
-          .select(col("dst").as("node"), col("c"))
-          .groupBy("node").agg(sum("c").as("contrib"))
-        ranks = ndLoop.join(contrib.hint("SHUFFLE_HASH"), Seq("node"), "left")
-          .select(col("node"), col("deg"),
-            expr(s"${base}L + (${dampingPct}L * coalesce(contrib, 0L)) div 100")
-              .as("rank"))
-      } else {
+      val rankSide = ranks.filter(col("deg") > 0)
+        .select(col("node"), expr("rank div deg").as("c"))
       val edgeContrib = rankSide
         .join(e, rankSide("node") === e("src"))
         .select(col("dst").as("node"), col("c"),
@@ -234,62 +146,67 @@ object Graph {
         .agg(sum("c").as("contrib"), max("d").as("deg"))
         .select(col("node"), col("deg"),
           expr(s"${base}L + (${dampingPct}L * contrib) div 100").as("rank"))
-      }
-      // truncate lineage every few rounds — each eager localCheckpoint is
-      // a full materialization job, so per-round checkpointing pays ~1
-      // job of fixed overhead per iteration while a 5-round linear plan
-      // is still cheap to optimize. r6 sweep at sf0.1 / 10 rounds (2 runs
-      // × 8 variants, one warm JVM): every-5 eager was the consistent
-      // best (5.8–6.9 s); every-1, every-3, every-10, and lazy
-      // checkpoints all landed 6.6–7.8 s; disabling AQE tripled the time
-      // (no broadcast conversion → 32-partition SMJ per round). The
-      // union+agg round shape above cut ~1 s vs the former join-back
-      // formulation. `checkpoint = false` keeps the whole lineage for
-      // plan-audit specs.
-      // r7 DECISION — floor accepted: the verdict's remaining idea
-      // ("compose two iterations per materialization") is already
-      // subsumed by every-5 checkpointing, which composes FIVE rounds
-      // per materialization and measured fastest; the 5.8–6.9 s warm
-      // band is therefore fixed per-job scheduler overhead at sf0.1
-      // scale (≥20 jobs: 2 setup + 10 round-pairs + checkpoints), which
-      // shrinks in RELATIVE terms as data grows — the per-round plan
-      // (one co-partitioned join + one aggregate) is already minimal.
-      // r10 REVISION: the floor moved. With the n-gated broadcast hint
-      // landed (jstack showed the warm reps spending time in janino
-      // re-compiles and driver-side re-planning of the growing 5-round
-      // lineage, not in tasks), SHORTER cadences win in the broadcast
-      // regime: PageRankProbe measured nocopart+ckpt2 at 5.03 s and
-      // ckpt1 at 4.90 vs 6.03 default (interleaved medians, 5 reps) —
-      // short lineage keeps each re-plan/codegen unit small. The default
-      // stays 5 (at scale each eager checkpoint is a full rank-frame
-      // materialization, and the broadcast-regime numbers don't transfer
-      // past the gate); q84 passes checkpointEvery = 2 with the citation.
-      if (checkpoint && (i % checkpointEvery == 0 || i == iterations))
-        ranks = ranks.localCheckpoint(eagerCheckpoint)
+      if (checkpoint && (i % CheckpointEvery == 0 || i == iterations))
+        ranks = ranks.localCheckpoint()
     }
     ranks.select("node", "rank").orderBy("node")
-    }
-    if (!scopeAqeOff) runLoop()
-    else AqeScopeLock.synchronized {
-      val aqeBefore = sess.conf.get(aqeKey)
-      sess.conf.set(aqeKey, "false")
-      try runLoop() finally sess.conf.set(aqeKey, aqeBefore)
-    }
   }
 
-  /** Serializes the AQE-off scope of concurrent [[pageRank]] calls (the
-    * conf is session-global; see the scope note there). */
+  /** One job over the checkpointed `edges`: each task folds its rows into a
+    * fresh accumulator until `add` returns false (the accumulator is past
+    * its cap), and the task results merge tree-wise. */
+  private[ops] def foldEdges[A: ClassTag](edges: DataFrame, zero: () => A)(
+      add: (A, InternalRow) => Boolean)(merge: (A, A) => A): A =
+    edges.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = zero()
+      while (rows.hasNext && add(acc, rows.next())) {}
+      Iterator.single(acc)
+    }.treeAggregate(zero())(merge, merge)
+
+  /** A two-long-column frame over driver arrays — `keys` ascending, after
+    * an optional null-key row (Spark's ascending order puts nulls first).
+    * Built without a job: the arrays ship in per-partition slices. */
+  private[ops] def sortedPairsFrame(sess: SparkSession, schema: StructType,
+      keys: Array[Long], values: Array[Long],
+      nullKeyRow: Option[Row]): DataFrame = {
+    val sc = sess.sparkContext
+    val step = math.max(1,
+      (keys.length + sc.defaultParallelism - 1) / sc.defaultParallelism)
+    val slices = keys.grouped(step).zip(values.grouped(step)).toSeq
+    val rows = sc.parallelize(slices, math.max(1, slices.size))
+      .mapPartitionsWithIndex { (p, it) =>
+        (if (p == 0) nullKeyRow.iterator else Iterator.empty) ++
+          it.flatMap { case (ks, vs) =>
+            ks.indices.iterator.map(i => Row(ks(i), vs(i)))
+          }
+      }
+    sess.createDataFrame(rows, schema)
+  }
+
+  /** Re-keys the eager edge checkpoint `ckpt` by `key` into a checkpoint
+    * that keeps its hash partitioning, then releases `ckpt`'s blocks, so a
+    * past-gate loop holds exactly one materialized edge table. */
+  private[ops] def rekey(ckpt: DataFrame, key: String): DataFrame = {
+    val keyed = checkpointKeepingPartitioning(ckpt.repartition(
+      ckpt.sparkSession.sessionState.conf.numShufflePartitions, col(key)))
+    ckpt.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    }
+    keyed
+  }
+
+  /** Serializes [[checkpointKeepingPartitioning]]'s AQE-off scope (the conf
+    * is session-global). */
   private object AqeScopeLock
 
-  /** Eager localCheckpoint that PRESERVES the frame's hash partitioning
-    * in the resulting LogicalRDD. `Dataset.localCheckpoint` records
-    * `executedPlan.outputPartitioning`, but under AQE the executed plan
-    * is an AdaptiveSparkPlanExec — a leaf wrapper that never overrides
-    * outputPartitioning, so the capture reads UnknownPartitioning and
-    * every downstream co-partitioning claim silently dies (r17 finding;
-    * Spark 4.1). Scoping AQE OFF around just this materialization makes
-    * the capture see the real exchange. Same session-global-conf trade
-    * as the loop scope — serialized on the same lock. */
+  /** Eager localCheckpoint that PRESERVES the frame's hash partitioning in
+    * the resulting LogicalRDD. `Dataset.localCheckpoint` records
+    * `executedPlan.outputPartitioning`, but under AQE the executed plan is
+    * an AdaptiveSparkPlanExec, which reports UnknownPartitioning, so every
+    * downstream co-partitioning claim would die. Scoping AQE off around
+    * just this materialization makes the capture see the real exchange.
+    * The conf is session-global while the job runs: concurrent queries on
+    * the same session run without AQE meanwhile. */
   private[ops] def checkpointKeepingPartitioning(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     AqeScopeLock.synchronized {
@@ -332,5 +249,36 @@ object Graph {
     }.mkString(",\n")
     head + "," + iters +
       s"\nSELECT node, CAST(rank AS BIGINT) AS rank FROM r$iterations ORDER BY node"
+  }
+}
+
+/** Per-key sums of Long values over edge rows, plus the null key's sum.
+  * `overflow` flags more than `cap` distinct non-null keys; past it [[add]]
+  * stops growing the map. */
+private[ops] final class KeySums(cap: Long) extends Serializable {
+  val sums: mutable.LongMap[Long] = mutable.LongMap.empty[Long]
+  var nullSum = 0L
+  var hasNull = false
+  var overflow = false
+
+  /** Adds `v` under the key at `ordinal` of `row` (reading null as null,
+    * never as 0). */
+  def add(row: InternalRow, ordinal: Int, v: Long): Unit =
+    if (row.isNullAt(ordinal)) { hasNull = true; nullSum += v }
+    else if (!overflow) {
+      val k = row.getLong(ordinal)
+      sums(k) = sums.getOrElse(k, 0L) + v
+      overflow = sums.size > cap
+    }
+
+  def merge(o: KeySums): KeySums = {
+    hasNull ||= o.hasNull
+    nullSum += o.nullSum
+    overflow ||= o.overflow
+    if (!overflow) {
+      o.sums.foreachEntry((k, v) => sums(k) = sums.getOrElse(k, 0L) + v)
+      overflow = sums.size > cap
+    }
+    this
   }
 }

@@ -752,10 +752,10 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
   private val ConcurrentWriters = 8
 
   /** Scope [[ConcurrentWriters]] concurrent output file writers around a
-    * bucket-partitioned write (restored after, same discipline as
-    * pageRank's AQE scope): with concurrent writers, FileFormatWriter
-    * skips the dynamic-partition SORT for tasks within the cap — at the
-    * 623M-key base build that sort externally spilled 20.5 GB for rows
+    * bucket-partitioned write (restored after, same discipline as the AQE
+    * scope of `Graph.checkpointKeepingPartitioning`): with concurrent
+    * writers, FileFormatWriter skips the dynamic-partition SORT for tasks
+    * within the cap — at the 623M-key base build that sort externally spilled 20.5 GB for rows
     * the repartition had already bucket-routed. [[bucketedWriteParts]]
     * sizes the exchange so tasks stay within the cap. */
   private def withConcurrentWriters[T](body: => T): T = {

@@ -83,12 +83,36 @@ class CurationSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L))
   }
 
+  test("dup clusters: in-gate labels and schema equal the past-gate " +
+    "rounds' (null ids, duplicate pairs, self-pair)") {
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+        .toSeq.sortBy(_._1.map(_.asInstanceOf[Long]))
+    val nulls = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, null), (null, 5L), (5L, 6L)).toDF("id_a", "id_b")
+    // a null id links nothing, and its own label is null
+    assert(labels(Dedup.dupClusters(nulls)) === Seq(None -> None,
+      Some(1L) -> Some(1L), Some(2L) -> Some(1L), Some(5L) -> Some(5L),
+      Some(6L) -> Some(5L)))
+    val messy = Seq[(java.lang.Long, java.lang.Long)]((7L, 3L), (3L, 7L),
+      (7L, 3L), (4L, 4L), (9L, null), (8L, 9L), (0L, 8L), (null, null))
+      .toDF("id_a", "id_b")
+    for (pairs <- Seq(nulls, messy)) {
+      val inGate = Dedup.dupClusters(pairs)
+      val pastGate = Dedup.dupClusters(pairs, broadcastLabelsMaxNodes = 0L)
+      assert(inGate.schema === pastGate.schema)
+      assert(labels(inGate) === labels(pastGate))
+    }
+  }
+
   test("dup clusters: a 100-node chain converges within the round budget") {
     import spark.implicits._
     // worst case for plain propagation (needs diameter=99 rounds);
     // pointer jumping must close it in O(log n)
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val clusters = Dedup.dupClusters(chain, maxIter = 10)
+    // union-find in the gate has no rounds: the budget binds past it
+    val clusters = Dedup.dupClusters(chain, maxIter = 10,
+        broadcastLabelsMaxNodes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters.size == 100)
     assert(clusters.values.forall(_ == 1L), s"unconverged: ${clusters.filter(_._2 != 1L)}")
@@ -98,7 +122,8 @@ class CurationSpec extends SparkSpec {
     // partially-propagated labels would silently dedup the WRONG docs
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalArgumentException] {
-      Dedup.dupClusters(chain, maxIter = 1).count()
+      Dedup.dupClusters(chain, maxIter = 1, broadcastLabelsMaxNodes = 0L)
+        .count()
     }
     assert(e.getMessage.contains("fixpoint"))
   }

@@ -46,7 +46,9 @@ class GraphSpec extends SparkSpec {
   test("pageRank plan: iteration is join + hash aggregate, no window, " +
     "no cartesian") {
     val edges = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false)
+    // the DataFrame loop runs past the node gate only
+    val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
+        broadcastRanksMaxNodes = 0L)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("Window"))
@@ -54,81 +56,28 @@ class GraphSpec extends SparkSpec {
       s"contrib rollup should be a hash aggregate:\n$plan")
   }
 
-  test("pageRank: n-gated broadcast hint — in-gate graphs pin the " +
-    "broadcast join up front, past-the-gate graphs withhold it, ranks " +
-    "identical") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L))
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    def initialPlan(bcastMax: Long): String =
-      Graph.pageRank(edges, iterations = 1, checkpoint = false,
-          broadcastRanksMaxNodes = bcastMax)
-        .queryExecution.executedPlan.toString
-    // 3 nodes ≤ any positive gate → the INITIAL plan (pre-AQE) already
-    // carries the broadcast join with the RANK side as the build
-    // (BuildLeft — rankSide is the join's left). The negative side can't
-    // assert "no broadcast" on spec-sized frames: the planner
-    // auto-broadcasts ANY side under autoBroadcastJoinThreshold — but
-    // unhinted it picks by size estimate (the edges LocalRelation,
-    // BuildRight here), so the build side is the observable hint effect.
-    val hintedPlan = initialPlan(2000000L)
-    assert(hintedPlan.contains("BroadcastHashJoin") &&
-      hintedPlan.contains("BuildLeft"), s"rank side not pinned:\n$hintedPlan")
-    // scope the negative gate to the rank-side join NODE (the hash-join
-    // line keyed on src), not the whole plan string — an unrelated future
-    // BuildLeft join elsewhere in the plan must not flip this (r11 ADVICE)
-    val unhintedJoins = initialPlan(0L).linesIterator
-      .filter(l => l.contains("HashJoin") && l.contains("src")).toSeq
-    assert(unhintedJoins.nonEmpty &&
-      unhintedJoins.forall(!_.contains("BuildLeft")),
-      s"past-the-gate rank join should not build left:\n$unhintedJoins")
-    val hinted = Graph.pageRank(edges, iterations = 5)
-      .as[(Long, Long)].collect().toSeq.sorted
-    val unhinted = Graph.pageRank(edges, iterations = 5,
+  test("pageRank: in-gate ranks and schema equal the past-gate loop's " +
+    "(null endpoint, duplicate edges, self-loop, sink)") {
+    // node 4 is a sink; (1,2) is doubled; 3 loops on itself; the null node
+    // receives from 2 and 5 and sends nothing (a null src joins nothing)
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, 2L),
+      (2L, 1L), (2L, null), (null, 5L), (5L, null), (5L, 6L), (6L, 5L),
+      (3L, 3L), (3L, 1L), (1L, 4L), (null, null)).toDF("src", "dst")
+    val plain = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (0L, 3L),
+      (1L, 3L), (2L, 2L), (3L, 4L)).toDF("src", "dst")
+    for ((edges, nodes) <- Seq(nulls -> 7, plain -> 5)) {
+      val inGate = Graph.pageRank(edges, iterations = 6)
+      val pastGate = Graph.pageRank(edges, iterations = 6,
         broadcastRanksMaxNodes = 0L)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(hinted === unhinted)
-  }
-
-  test("pageRank: dstPartitionLoop — ranks identical to the default " +
-    "shape, and the round body plans no shuffle above its checkpoints") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (0L, 3L),
-      (1L, 3L)).toDF("src", "dst")
-    val default = Graph.pageRank(edges, iterations = 6)
-      .as[(Long, Long)].collect().toSeq.sorted
-    val dstLoop = Graph.pageRank(edges, iterations = 6,
-        dstPartitionLoop = true)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(default === dstLoop)
-    // one un-checkpointed round (minus the final orderBy, which owns the
-    // only legitimate exchange): the contrib aggregate and the reattach
-    // join must both ride the setup partitioning — no ShuffleExchange in
-    // the round body. checkpoint=false keeps the round's lineage visible;
-    // the setup repartitions hide below their own localCheckpoints.
-    val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
-        dstPartitionLoop = true)
-      .queryExecution.executedPlan.toString
-    val body = plan.linesIterator
-      .filterNot(_.contains("rangepartitioning")).mkString("\n")
-    assert(!body.contains("Exchange hashpartitioning"),
-      s"dstPartitionLoop round body should be exchange-free:\n$plan")
-  }
-
-  test("pageRank: AQE-off-while-pinned scope — ranks identical either " +
-    "way, session setting restored after the call") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    assert(before === "true", "spec assumes the session default")
-    val scoped = Graph.pageRank(edges, iterations = 4)
-      .as[(Long, Long)].collect().toSeq.sorted
-    // the loop ran with AQE scoped off (in-gate, eager checkpoints) and
-    // the session came back untouched
-    assert(spark.conf.get(key) === before)
-    val unscoped = Graph.pageRank(edges, iterations = 4,
-        adaptiveWhilePinned = true)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(scoped === unscoped)
-    assert(spark.conf.get(key) === before)
+      assert(inGate.schema === pastGate.schema)
+      val rows = inGate.collect().toSeq
+      assert(rows === pastGate.collect().toSeq)
+      assert(rows.size === nodes)
+    }
+    val ranked = Graph.pageRank(nulls, iterations = 6).collect()
+    assert(ranked.head.isNullAt(0) && !ranked.head.isNullAt(1),
+      s"the null node is ranked first: ${ranked.toSeq}")
+    assert(!ranked.exists(r => !r.isNullAt(0) && r.getLong(0) == 0L),
+      "a null endpoint must never read as node 0")
   }
 }
