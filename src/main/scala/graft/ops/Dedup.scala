@@ -370,9 +370,10 @@ object Dedup {
     * serial-map artifact — every sf-dir table is ONE split). One narrow
     * round-robin shuffle of the doc rows (bytes = the doc text, small
     * exactly when the gate fires) parallelizes the kernel stage.
-    * Same-JVM interleaved probe (PairFamilyWidthProbe, 32 cores, sf0.1):
-    * q19 2.51 → 1.98, q96 2.81 → 2.55 medians; warm in-sweep pairs
-    * confirm for the jaccard pipeline (q19 −0.53, q89 −0.54, q96 −0.26).
+    * Same-JVM interleaved legs (32 cores, sf0.1; the measuring main is
+    * in git history): q19 2.51 → 1.98, q96 2.81 → 2.55 medians; warm
+    * in-sweep pairs confirm for the jaccard pipeline (q19 −0.53, q89
+    * −0.54, q96 −0.26).
     * APPLIED ONLY to jaccardPairCounts: everywhere the input feeds more
     * than one kernel subtree (minhash pairs + verify legs, cross-corpus
     * sides, decontamination, tfidf) or a checkpoint fan-out (langid),
@@ -381,10 +382,10 @@ object Dedup {
     * the serialized kernel (booked negatives in OPTIMIZATION_r17.md).
     * At scale the scan's own splits provide the parallelism and the
     * gate stays OFF — unknown stats estimate huge and also stay off
-    * (the safe side; the r10 SubstringAbProbe measured a corpus-mass
-    * doc shuffle losing). Round-robin placement is semantically
-    * invisible here: every consumer below is a groupBy/join, never
-    * order-sensitive. */
+    * (the safe side; an interleaved A/B measured a corpus-mass doc
+    * shuffle losing, see git history). Round-robin placement is
+    * semantically invisible here: every consumer below is a groupBy/join,
+    * never order-sensitive. */
   private[ops] def widenNarrowScan(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.sessionState.conf
     val parts = conf.numShufflePartitions
@@ -920,39 +921,31 @@ object Dedup {
     * intervals into maximal spans. Compare q77's repeated-passage miner
     * (fixed disjoint chunks, no merging): this is the span-exact form. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                    n: Int = 10, minOcc: Int = 2,
-                    occParts: Int = 0, docParts: Int = 0): DataFrame = {
+                    n: Int = 10, minOcc: Int = 2): DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
-    // Pre-shingle parallelism (r9): posexplode amplifies each doc into
+    // Pre-shingle parallelism: posexplode amplifies each doc into
     // ~|tokens| shingle rows (~450× the scan bytes at 504k docs), so a
     // scan-split-sized map task writes a shuffle buffer ~450× its input —
     // past per-task execution memory, and the shuffle WRITER's external
     // sorter flushes to disk (booked as the substring phase's 23 GB
     // "spill"; the occurrence filter itself is sort-free). One narrow
     // round-robin exchange of the DOC frame first (docs cross the wire
-    // once, ~1/450th of the shingle stream) sizes the post-explode write
-    // buffers to memory. Same 8× default as `occParts`.
+    // once, ~1/450th of the shingle stream, 8× the session parallelism)
+    // sizes the post-explode write buffers to memory.
     //
-    // ADAPTIVE by default (r10, closing the r9 verdict's q90/q91 item):
-    // on a SMALL corpus the exchange is pure overhead — the whole
+    // On a SMALL corpus the exchange is pure overhead — the whole
     // post-explode stream fits scan-split write buffers with room to
-    // spare. SubstringAbProbe (interleaved same-JVM legs at the bench
-    // shape, median-of-5) measured the exchange costing q90 1.29→1.53 s
-    // (+19%) and q91 2.02→2.09 s at sf0.1 — the mechanism behind the
-    // r8→r9 bench medians the r9 verdict flagged (local q90 2.15→3.64,
-    // q91 3.01→3.96; full-sweep context amplifies the isolated delta).
-    // The passthrough leg RETAINS the r9 kernel/pack work and still beats
-    // the r8 bench medians, so the exchange was the whole regression,
-    // not the kernel swap. `docParts = 0` therefore
-    // consults plan statistics the way `ParquetSink.writeSized` does and
-    // repartitions only when the doc frame's estimated bytes reach
+    // spare. Interleaved same-JVM legs at the bench shape (median-of-5,
+    // sf0.1; the measuring main is in git history) measured the exchange
+    // costing q90 1.29 → 1.53 s (+19%) and q91 2.02 → 2.09 s, with the
+    // kernel and packing work unchanged between legs. So the exchange
+    // runs only when the doc frame's plan-stats bytes reach
     // [[DocRepartitionMinBytes]] (64 MB — post-explode that is ~1.3 GB
     // packed across a 32-split scan, still comfortably inside write
     // buffers; the 504k-doc scale corpus is 1.7 GB, 27× past the gate,
     // and an UNKNOWN size estimates to Long.Max → repartition, the
-    // scale-safe direction). Explicit `docParts > 0` forces the exchange
-    // at that width; `docParts < 0` forces passthrough (the A/B leg).
-    val sh = adaptiveDocBase(df, docParts)
+    // scale-safe direction).
+    val sh = adaptiveDocBase(df)
       .select(col(idCol).cast("long").as("id"),
         posexplode(posShingleHashesUdf(col(textCol), lit(n)))
           .as(Seq("pos", "shingle")))
@@ -973,7 +966,7 @@ object Dedup {
     // Contrast [[graft.ops.Curation.boilerplateProfile]], where 3-gram
     // keys repeat corpus-wide and a count aggregate + join wins — pick
     // the primitive by the key-repetition profile.
-    val covered = coveredPositionsHash(sh, minOcc, occParts)
+    val covered = coveredPositionsHash(sh, minOcc, 0)
     islandsToSpans(covered, n)
   }
 
@@ -996,9 +989,9 @@ object Dedup {
     * so a head-of-zipf boilerplate shingle with 10⁹ occurrences costs
     * its partition CPU linearly and O(1) memory, where a buffer-to-drain
     * replay would park all 10⁹ rows in one unspillable task heap. `parts`
-    * sizes the partitions (0 → 8× the session shuffle parallelism); an
-    * explicit repartition count also keeps AQE from coalescing partitions
-    * back into big tasks. Never a sort, never a pair blowup. */
+    * forces the partition count (0 → [[occExchangeParts]]' stats-derived
+    * width); an explicit repartition count also keeps AQE from coalescing
+    * partitions back into big tasks. Never a sort, never a pair blowup. */
   private[graft] def coveredPositionsHash(sh: DataFrame, minOcc: Int,
                                           parts: Int): DataFrame = {
     val spark = sh.sparkSession
@@ -1048,20 +1041,15 @@ object Dedup {
     * exchange. Package-visible so specs can pin both sides of the gate. */
   private[graft] final val DocRepartitionMinBytes = 64L << 20
 
-  /** The shared pre-shingle parallelism dispatch of [[repeatedSpans]] /
+  /** The shared pre-shingle parallelism gate of [[repeatedSpans]] /
     * [[incrementalRepeatedSpans]] / [[shingleOccurrenceTable]] — the full
-    * rationale (amplification regime, measured costs on both sides, the
-    * loud docParts contract) lives at the [[repeatedSpans]] call site. */
-  private def adaptiveDocBase(df: DataFrame, docParts: Int): DataFrame = {
-    val repartitionDocs =
-      if (docParts > 0) true
-      else if (docParts < 0) false
-      else df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        DocRepartitionMinBytes
-    if (!repartitionDocs) df
-    else df.repartition(if (docParts > 0) docParts
-      else df.sparkSession.sessionState.conf.numShufflePartitions * 8)
-  }
+    * rationale (amplification regime, measured costs on both sides) lives
+    * at the [[repeatedSpans]] call site. */
+  private def adaptiveDocBase(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <
+        DocRepartitionMinBytes) df
+    else df.repartition(
+      df.sparkSession.sessionState.conf.numShufflePartitions * 8)
 
   /** Occurrence filter, count-over-window twin — r6's measured winner
     * over the aggregate shapes (one binary sort of the keyed stream),
@@ -1128,8 +1116,7 @@ object Dedup {
     * cannot be checked from the frame and is the caller's obligation. */
   def stripRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 10, minOcc: Int = 2,
-                         precomputedSpans: Option[DataFrame] = None,
-                         docParts: Int = 0): DataFrame = {
+                         precomputedSpans: Option[DataFrame] = None): DataFrame = {
     precomputedSpans.foreach { ps =>
       val missing = Seq("id", "span_start", "span_end")
         .filterNot(ps.columns.contains)
@@ -1139,8 +1126,7 @@ object Dedup {
           s"built with the same n=$n, minOcc=$minOcc")
     }
     val spans = precomputedSpans
-      .getOrElse(repeatedSpans(df, idCol, textCol, n, minOcc,
-        docParts = docParts))
+      .getOrElse(repeatedSpans(df, idCol, textCol, n, minOcc))
       .groupBy("id")
       .agg(collect_list(struct(col("span_start").cast("long").as("_1"),
         col("span_end").cast("long").as("_2"))).as("spans"))
@@ -1267,13 +1253,12 @@ object Dedup {
     * therefore distinct-shingle-sized, the inherent state of span-level
     * dedup (it shuffles and persists on 8-byte keys, never text). */
   def shingleOccurrenceTable(df: DataFrame, textCol: String,
-                             n: Int = 10, parts: Int = 0,
-                             docParts: Int = 0): DataFrame = {
+                             n: Int = 10, parts: Int = 0): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
     val spark = df.sparkSession
     import spark.implicits._
     val p = occExchangeParts(df, parts)
-    adaptiveDocBase(df, docParts)
+    adaptiveDocBase(df)
       .select(explode(posShingleHashesUdf(col(textCol), lit(n)))
         .as("shingle"))
       .select(col("shingle"), lit(1L).as("w"))
@@ -1297,7 +1282,7 @@ object Dedup {
   /** The shared occurrence-exchange width dispatch: >0 forced, 0
     * adaptive on the input's plan-stats bytes (≥ [[OccWideMinBytes]] →
     * 8× the session parallelism, under it → the session default). */
-  private def occExchangeParts(df: DataFrame, parts: Int): Int = {
+  private def occExchangeParts(df: DataFrame, parts: Int = 0): Int = {
     val session = df.sparkSession.sessionState.conf.numShufflePartitions
     if (parts > 0) parts
     else if (df.queryExecution.optimizedPlan.stats.sizeInBytes >=
@@ -1310,14 +1295,13 @@ object Dedup {
     * [[KeyedSum]] kernel — never a join, never a sort. The shared tail of
     * [[mergeOccurrenceTables]] and [[graft.streaming.OccStateStore]]'s
     * bucket compaction. */
-  private[graft] def aggregateOccurrences(df: DataFrame,
-                                          parts: Int = 0): DataFrame = {
+  private[graft] def aggregateOccurrences(df: DataFrame): DataFrame = {
     require(df.columns.contains("shingle") && df.columns.contains("occ"),
       s"occurrence table needs (shingle, occ); got ${df.columns.mkString(", ")}")
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("shingle"), col("occ"))
-      .repartition(occExchangeParts(df, parts), col("shingle"))
+      .repartition(occExchangeParts(df), col("shingle"))
       .as[(Long, Long)]
       .mapPartitions(it => new KeyedSum()(it))
       .toDF("shingle", "occ")
@@ -1327,15 +1311,14 @@ object Dedup {
     * occurrence tables (either from [[shingleOccurrenceTable]] or a prior
     * merge). Union + one 8-byte-key exchange + the [[KeyedSum]] kernel —
     * never a join, never a sort. */
-  def mergeOccurrenceTables(a: DataFrame, b: DataFrame,
-                            parts: Int = 0): DataFrame = {
+  def mergeOccurrenceTables(a: DataFrame, b: DataFrame): DataFrame = {
     Seq(a, b).foreach { t =>
       require(t.columns.contains("shingle") && t.columns.contains("occ"),
         s"occurrence table needs (shingle, occ); got ${t.columns.mkString(", ")}")
     }
     aggregateOccurrences(
       a.select(col("shingle"), col("occ"))
-        .unionByName(b.select(col("shingle"), col("occ"))), parts)
+        .unionByName(b.select(col("shingle"), col("occ"))))
   }
 
   /** Incremental substring-level exact dedup: [[repeatedSpans]] for an
@@ -1395,13 +1378,13 @@ object Dedup {
     * -1 (r11 advice); q100 pins it to bench the at-scale shuffle lane. */
   final val MicroBatchGateDisabled = -1L
 
+  /** False-positive rate of [[incrementalRepeatedSpans]]' Bloom slim. */
+  private final val BloomFpp = 0.01
+
   def incrementalRepeatedSpans(batch: DataFrame, idCol: String,
                                textCol: String, baseOcc: DataFrame,
                                n: Int = 10, minOcc: Int = 2,
-                               occParts: Int = 0,
-                               docParts: Int = 0,
                                bloomKeys: Long = 0,
-                               bloomFpp: Double = 0.01,
                                microBatchMaxBytes: Long = MicroBatchMaxBytes)
       : DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
@@ -1411,7 +1394,7 @@ object Dedup {
         s"built with the same n=$n; got ${baseOcc.columns.mkString(", ")}")
     val spark = batch.sparkSession
     import spark.implicits._
-    val p = occExchangeParts(batch, occParts)
+    val p = occExchangeParts(batch)
     // Micro-batch regime (r11): at streaming cadence the batch is tiny
     // while the state stays corpus-sized, so paying the state's exchange
     // per micro-batch is the wrong side of the trade. Under the gate the
@@ -1430,7 +1413,7 @@ object Dedup {
     val microBatch = microBatchMaxBytes > 0 &&
       batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
         BigInt(microBatchMaxBytes)
-    val shEx0 = adaptiveDocBase(batch, docParts)
+    val shEx0 = adaptiveDocBase(batch)
       .select(col(idCol).cast("long").as("id"),
         posexplode(posShingleHashesUdf(col(textCol), lit(n)))
           .as(Seq("pos", "shingle")))
@@ -1456,17 +1439,16 @@ object Dedup {
     // splits the plan) cost more than the exchange they save. The option
     // exists for the regime the arithmetic favors it: real cluster
     // networks (exchange bytes cross racks, not RAM) and state/batch
-    // ratios where fpp·|state| ≪ the saved shuffle — pick `bloomFpp` ≪
-    // |batch keys| / |state keys| (~10 bits/key at the 0.01 default,
-    // ≈ 96 MB closure at 80M keys). The count table is checkpointed
-    // first so the Bloom build's job does not re-shingle the batch for
-    // the main query.
+    // ratios where fpp·|state| ≪ the saved shuffle (the false-positive
+    // rate is fixed at [[BloomFpp]]: ~10 bits/key, ≈ 96 MB closure at
+    // 80M keys). The count table is checkpointed first so the Bloom
+    // build's job does not re-shingle the batch for the main query.
     val batchCnt =
       if (microBatch || bloomKeys > 0) batchCnt0.localCheckpoint()
       else batchCnt0
     val baseSrc =
       if (!microBatch && bloomKeys > 0) {
-        val bf = batchCnt.stat.bloomFilter("shingle", bloomKeys, bloomFpp)
+        val bf = batchCnt.stat.bloomFilter("shingle", bloomKeys, BloomFpp)
         val mightContain =
           udf { (k: java.lang.Long) => k != null && bf.mightContainLong(k) }
         baseOcc.filter(mightContain(col("shingle")))
@@ -1573,9 +1555,8 @@ object Dedup {
     * [[incrementalRepeatedSpans]], whose default path is lazy and
     * lineage-recoverable. */
   def prepareIncrementalBatch(batch: DataFrame, idCol: String,
-                              textCol: String, n: Int = 10,
-                              docParts: Int = 0,
-                              occParts: Int = 0): (DataFrame, DataFrame) = {
+                              textCol: String,
+                              n: Int = 10): (DataFrame, DataFrame) = {
     require(n >= 1, s"need n >= 1, got $n")
     val spark = batch.sparkSession
     import spark.implicits._
@@ -1583,10 +1564,10 @@ object Dedup {
     // session default instead of paying 8x empty tasks per batch; note
     // the stats here are the DOC frame's — the exchange amplifies ~10x
     // into shingles, inside the gate's margin at the 64 MB threshold
-    val p = occExchangeParts(batch, occParts)
+    val p = occExchangeParts(batch)
     val micro = batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(MicroBatchMaxBytes)
-    val shEx0 = adaptiveDocBase(batch, docParts)
+    val shEx0 = adaptiveDocBase(batch)
       .select(col(idCol).cast("long").as("id"),
         posexplode(posShingleHashesUdf(col(textCol), lit(n)))
           .as(Seq("pos", "shingle")))
@@ -1747,9 +1728,9 @@ object Dedup {
     * [[coveredPositionsHash]] asserts). `n` couples to the occurrence
     * table exactly as [[incrementalRepeatedSpans]] documents. */
   def shinglePositionsTable(df: DataFrame, idCol: String, textCol: String,
-                            n: Int = 10, docParts: Int = 0): DataFrame = {
+                            n: Int = 10): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
-    adaptiveDocBase(df, docParts)
+    adaptiveDocBase(df)
       .select(col(idCol).cast("long").as("id"),
         posexplode(posShingleHashesUdf(col(textCol), lit(n)))
           .as(Seq("pos", "shingle")))
@@ -1798,7 +1779,7 @@ object Dedup {
     * Only affected docs' positions reach the gaps-and-islands merge. */
   def retroactiveSpanSweep(positions: DataFrame, prevOcc: DataFrame,
                            curOcc: DataFrame, n: Int = 10,
-                           minOcc: Int = 2, occParts: Int = 0,
+                           minOcc: Int = 2,
                            sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
     val missing = Seq("id", "pos", "shingle")
@@ -1807,7 +1788,7 @@ object Dedup {
       s"positions must be shinglePositionsTable output (missing: " +
         s"${missing.mkString(", ")}) built with the same n=$n")
     def coveredKeys(occ: DataFrame) =
-      aggregateOccurrences(occ, occParts)
+      aggregateOccurrences(occ)
         .filter(col("occ") >= minOcc).select("shingle")
     // newly covered keys: counts are monotone, so prev-covered ⊆
     // cur-covered and the anti-join is exactly the crossing set
@@ -1815,8 +1796,7 @@ object Dedup {
       .join(coveredKeys(prevOcc).hint("SHUFFLE_HASH"),
         Seq("shingle"), "left_anti")
       .localCheckpoint()
-    sweepTail(positions, positions, crossed, curOcc, n, minOcc, occParts,
-      sliceAffected)
+    sweepTail(positions, positions, crossed, curOcc, n, minOcc, sliceAffected)
   }
 
   /** Delta form of [[retroactiveSpanSweep]] — the state-store-native
@@ -1833,7 +1813,7 @@ object Dedup {
     * pair form (RetroactiveSweepSpec pins it). */
   def retroactiveSpanSweepDelta(positions: DataFrame, prevOcc: DataFrame,
                                 deltaOcc: DataFrame, n: Int = 10,
-                                minOcc: Int = 2, occParts: Int = 0,
+                                minOcc: Int = 2,
                                 sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
     val missing = Seq("id", "pos", "shingle")
@@ -1846,10 +1826,10 @@ object Dedup {
         s"occurrence frames need (shingle, occ); got ${t.columns.mkString(", ")}")
     }
     sweepTail(positions, positions,
-      crossedKeysDelta(prevOcc, deltaOcc, minOcc, occParts),
+      crossedKeysDelta(prevOcc, deltaOcc, minOcc),
       prevOcc.select("shingle", "occ")
         .unionByName(deltaOcc.select("shingle", "occ")),
-      n, minOcc, occParts, sliceAffected)
+      n, minOcc, sliceAffected)
   }
 
   /** The delta decomposition's crossed-key set — prev < minOcc ≤
@@ -1876,7 +1856,7 @@ object Dedup {
     * pass). Row-identical either way (RetroactiveSweepSpec pins both
     * branches against the pair form). */
   def crossedKeysDelta(prevOcc: DataFrame, deltaOcc: DataFrame,
-                       minOcc: Int = 2, occParts: Int = 0): DataFrame = {
+                       minOcc: Int = 2): DataFrame = {
     require(minOcc >= 2, s"need minOcc >= 2, got $minOcc")
     Seq(prevOcc, deltaOcc).foreach { t =>
       require(t.columns.contains("shingle") && t.columns.contains("occ"),
@@ -1890,13 +1870,13 @@ object Dedup {
         BigInt(graft.streaming.OccStateStore.EstBytesPerOccRow))
         .min(BigInt(Long.MaxValue)).toLong
     if (estRows > Curation.MaxFlaggedIdBroadcast)
-      taggedCrossed(prevOcc, deltaOcc, minOcc, occParts)
+      taggedCrossed(prevOcc, deltaOcc, minOcc)
     else
       crossedFromDeltaAgg(prevOcc,
-        aggregateOccurrences(deltaOcc, occParts)
+        aggregateOccurrences(deltaOcc)
           .select(col("shingle"), col("occ").as("d_occ"))
           .localCheckpoint(),
-        minOcc, occParts)
+        minOcc)
   }
 
   /** The BULK branch of [[crossedKeysDelta]] — r13's shape, kept by
@@ -1913,7 +1893,7 @@ object Dedup {
     * was REMOVED and the fixed-heap sweep residual is declared
     * closed-by-measurement (SCALE.md round 15). */
   private[graft] def taggedCrossed(prevOcc: DataFrame, deltaOcc: DataFrame,
-                                   minOcc: Int, occParts: Int): DataFrame = {
+                                   minOcc: Int): DataFrame = {
     val spark = prevOcc.sparkSession
     import spark.implicits._
     val tagged = prevOcc
@@ -1921,7 +1901,7 @@ object Dedup {
       .unionByName(deltaOcc
         .select(col("shingle"), lit(0L).as("a"), col("occ").as("b")))
     tagged
-      .repartition(occExchangeParts(tagged, occParts), col("shingle"))
+      .repartition(occExchangeParts(tagged), col("shingle"))
       .as[(Long, Long, Long)]
       .mapPartitions(it => new KeyedSum2()(it))
       .toDF("shingle", "p_occ", "d_occ")
@@ -1942,7 +1922,7 @@ object Dedup {
     * prev rows whose shingle is in `dAgg` — extra rows are slimmed
     * exactly here. */
   def crossedFromDeltaAgg(prevOcc: DataFrame, dAgg: DataFrame,
-                          minOcc: Int = 2, occParts: Int = 0): DataFrame = {
+                          minOcc: Int = 2): DataFrame = {
     require(minOcc >= 2, s"need minOcc >= 2, got $minOcc")
     val nDelta = dAgg.count()
     if (nDelta > Curation.MaxFlaggedIdBroadcast)
@@ -1950,13 +1930,12 @@ object Dedup {
       // corpus mass (the r14 A/B's losing side) — dAgg is itself a valid
       // per-shingle-sum delta frame, so the tagged union applies as-is
       taggedCrossed(prevOcc,
-        dAgg.select(col("shingle"), col("d_occ").as("occ")),
-        minOcc, occParts)
+        dAgg.select(col("shingle"), col("d_occ").as("occ")), minOcc)
     else {
       val dKeys = dAgg.select("shingle")
       val prevSlim =
         prevOcc.join(broadcast(dKeys), Seq("shingle"), "left_semi")
-      val pAgg = aggregateOccurrences(prevSlim, occParts)
+      val pAgg = aggregateOccurrences(prevSlim)
         .select(col("shingle"), col("occ").as("p_occ"))
       dAgg.join(pAgg, Seq("shingle"), "left_outer")
         .select(col("shingle"),
@@ -1983,7 +1962,6 @@ object Dedup {
   def sweepFromCrossed(positionsForCrossed: DataFrame,
                        positions: DataFrame, crossed: DataFrame,
                        curOcc: DataFrame, n: Int = 10, minOcc: Int = 2,
-                       occParts: Int = 0,
                        sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
     Seq(positionsForCrossed, positions).foreach { t =>
@@ -1993,7 +1971,7 @@ object Dedup {
           s"${missing.mkString(", ")})")
     }
     sweepTail(positionsForCrossed, positions, crossed, curOcc, n, minOcc,
-      occParts, sliceAffected)
+      sliceAffected)
   }
 
   /** Affected-doc cap per sweep SLICE (r12 verdict item 6 — the 2×
@@ -2027,8 +2005,7 @@ object Dedup {
   private def sweepTail(positionsForCrossed: DataFrame,
                         positions: DataFrame, crossed: DataFrame,
                         curOcc: DataFrame, n: Int, minOcc: Int,
-                        occParts: Int,
-                        sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
+                        sliceAffected: Int): DataFrame = {
     // the crossed-key set is increment-bounded and usually tiny (30,886
     // affected docs from ~79k crossed keys at the 504k run) — under the
     // gate it broadcasts, so the corpus-sized positions index is FILTERED
@@ -2075,7 +2052,7 @@ object Dedup {
         curOcc.join(broadcast(affKeys), Seq("shingle"), "left_semi")
       else curOcc.join(affKeys.hint("SHUFFLE_HASH"),
         Seq("shingle"), "left_semi")
-    val coveredAff0 = aggregateOccurrences(curSlim, occParts)
+    val coveredAff0 = aggregateOccurrences(curSlim)
       .filter(col("occ") >= minOcc).select("shingle")
     // the sliced path reads coveredAff once per slice — checkpoint it
     // (affected-keys-bounded, 8-byte rows) so the state slim runs once

@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 import scala.reflect.ClassTag
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCheckpointBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -123,12 +123,13 @@ object Graph {
     val parts = e.sparkSession.sessionState.conf.numShufflePartitions
     // nodes + out-degrees in ONE shuffle: explode each edge into its two
     // endpoints with a source marker and sum the markers per node
-    val nodesDeg = checkpointKeepingPartitioning(e.select(explode(array(
-        struct(col("src").as("node"), lit(1L).as("d")),
-        struct(col("dst").as("node"), lit(0L).as("d")))).as("x"))
-      .groupBy(col("x.node").as("node"))
-      .agg(sum(col("x.d")).as("deg"))
-      .repartition(parts, col("node")))
+    val nodesDeg = GraftCheckpointBridge.localCheckpointHashed(
+      e.select(explode(array(
+          struct(col("src").as("node"), lit(1L).as("d")),
+          struct(col("dst").as("node"), lit(0L).as("d")))).as("x"))
+        .groupBy(col("x.node").as("node"))
+        .agg(sum(col("x.d")).as("deg")),
+      parts, col("node"))
     val init = Unit / nodesDeg.count()
     val base = ((100L - dampingPct) * init) / 100L
     var ranks = nodesDeg.withColumn("rank", lit(init))
@@ -187,34 +188,12 @@ object Graph {
     * that keeps its hash partitioning, then releases `ckpt`'s blocks, so a
     * past-gate loop holds exactly one materialized edge table. */
   private[ops] def rekey(ckpt: DataFrame, key: String): DataFrame = {
-    val keyed = checkpointKeepingPartitioning(ckpt.repartition(
-      ckpt.sparkSession.sessionState.conf.numShufflePartitions, col(key)))
+    val keyed = GraftCheckpointBridge.localCheckpointHashed(ckpt,
+      ckpt.sparkSession.sessionState.conf.numShufflePartitions, col(key))
     ckpt.queryExecution.logical.collect {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     }
     keyed
-  }
-
-  /** Serializes [[checkpointKeepingPartitioning]]'s AQE-off scope (the conf
-    * is session-global). */
-  private object AqeScopeLock
-
-  /** Eager localCheckpoint that PRESERVES the frame's hash partitioning in
-    * the resulting LogicalRDD. `Dataset.localCheckpoint` records
-    * `executedPlan.outputPartitioning`, but under AQE the executed plan is
-    * an AdaptiveSparkPlanExec, which reports UnknownPartitioning, so every
-    * downstream co-partitioning claim would die. Scoping AQE off around
-    * just this materialization makes the capture see the real exchange.
-    * The conf is session-global while the job runs: concurrent queries on
-    * the same session run without AQE meanwhile. */
-  private[ops] def checkpointKeepingPartitioning(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    AqeScopeLock.synchronized {
-      val key = "spark.sql.adaptive.enabled"
-      val before = sess.conf.get(key)
-      sess.conf.set(key, "false")
-      try df.localCheckpoint() finally sess.conf.set(key, before)
-    }
   }
 
   /** The DuckDB twin: same fixed-point update, iterations unrolled as

@@ -222,8 +222,9 @@ private[graft] final class OccurrenceFilter(minOcc: Int) {
     if (cap == MaxCap)
       throw new IllegalStateException(
         s"OccurrenceFilter: > ~${(MaxCap.toLong * 6 / 10) / 1000000}M " +
-          "distinct keys in one partition — raise occParts/parts so " +
-          "partitions carry fewer distinct shingles")
+          "distinct keys in one partition — raise " +
+          "spark.sql.shuffle.partitions so partitions carry fewer " +
+          "distinct shingles")
     val ok = keys; val oc = cnts; val oh = heads
     cap <<= 1; mask = cap - 1
     keys = new Array[Long](cap); cnts = new Array[Int](cap)
@@ -259,7 +260,8 @@ private[graft] final class OccurrenceFilter(minOcc: Int) {
       if (pCap == MaxCap)
         throw new IllegalStateException(
           "OccurrenceFilter: parked-row store exceeded 2^30 entries — " +
-            "raise occParts/parts (store is distinct-keys × (minOcc−1))")
+            "raise spark.sql.shuffle.partitions (store is distinct-keys " +
+            "× (minOcc−1))")
       pCap <<= 1
       pVal = java.util.Arrays.copyOf(pVal, pCap)
       pNext = java.util.Arrays.copyOf(pNext, pCap)

@@ -277,26 +277,10 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
                 keysOnDriver: Array[Long]): OccStateStore.ProbeRead =
     probeReadImpl(batchId, Right(keysOnDriver), keysOnDriver.length.toLong)
 
-  /** Harness-only (ScaleRun's probe-crossover phase): [[probeRead]] with
-    * the tier-4 gate FORCED to `rowFilter` — true reads admitted
-    * sub-files with per-file key predicates regardless of
-    * [[OccStateStore.ProbeRowFilterMaxKeys]] (files past
-    * [[SubFileProbe.MaxFilterKeysPerFile]] still degrade to whole
-    * reads), false reads them whole through the vectorized scan. Rows
-    * differ by design (the sharp read drops non-matching rows — a
-    * subset every consumer's contract allows); the measurement, not the
-    * serve path, is the caller. */
-  private[graft] def probeReadTier(batchId: Long, keys: DataFrame,
-                                   keyCountHint: Long,
-                                   rowFilter: Boolean): OccStateStore.ProbeRead =
-    probeReadImpl(batchId, Left(keys), keyCountHint, Some(rowFilter))
-
   private def probeReadImpl(batchId: Long,
                             keysIn: Either[DataFrame, Array[Long]],
-                            keyCountHint: Long,
-                            collectKeysOverride: Option[Boolean] = None)
-      : OccStateStore.ProbeRead =
-    probeSpecs(batchId, keysIn, keyCountHint, collectKeysOverride) match {
+                            keyCountHint: Long): OccStateStore.ProbeRead =
+    probeSpecs(batchId, keysIn, keyCountHint) match {
       case None =>
         OccStateStore.ProbeRead(emptyOcc, Seq.empty, Seq.empty, None, None,
           None, driverPlanned = false)
@@ -358,8 +342,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * never diverge on WHAT to read. */
   private def probeSpecs(batchId: Long,
                          keysIn: Either[DataFrame, Array[Long]],
-                         keyCountHint: Long,
-                         collectKeysOverride: Option[Boolean] = None)
+                         keyCountHint: Long)
       : Option[(Seq[String], Seq[SubFileProbe.FileKeys], Boolean)] = {
     latestVersionBefore(batchId) match {
       case None => None
@@ -411,8 +394,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
                   .min(BigInt(Long.MaxValue)).toLong)
           }
         val collectKeys = subSplits.nonEmpty &&
-          collectKeysOverride.getOrElse(
-            estKeys <= OccStateStore.ProbeRowFilterMaxKeys)
+          estKeys <= OccStateStore.ProbeRowFilterMaxKeys
         // micro batches plan on the DRIVER (r14 verdict item 2): the
         // routing is pure arithmetic over the keys + already-memoized
         // sidecars, so the only distributed work left is ONE narrow
@@ -752,8 +734,8 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
   private val ConcurrentWriters = 8
 
   /** Scope [[ConcurrentWriters]] concurrent output file writers around a
-    * bucket-partitioned write (restored after, same discipline as the AQE
-    * scope of `Graph.checkpointKeepingPartitioning`): with concurrent
+    * bucket-partitioned write (the caller's value is restored after):
+    * with concurrent
     * writers, FileFormatWriter skips the dynamic-partition SORT for tasks
     * within the cap — at the 623M-key base build that sort externally spilled 20.5 GB for rows
     * the repartition had already bucket-routed. [[bucketedWriteParts]]
@@ -1200,9 +1182,9 @@ object OccStateStore {
     * and a corpus-mass key collect would not be driver-safe). Serving
     * micro-batches (1–50 docs ≈ 10²–10⁴ keys) sit far under it.
     *
-    * Set FROM the measured crossover (r16, ScaleRun `probe-crossover`
-    * over the 504k-doc serve store, both sides FORCED at each density —
-    * SCALE.md round-16 table): the sharp read wins every measured
+    * Set FROM the measured crossover (r16, over the 504k-doc serve
+    * store, both sides forced at each density by a ScaleRun phase now in
+    * git history — SCALE.md round-16 table): the sharp read wins every measured
     * density up to ~533k keys (277k keys: 7.2 s / 1.8 GB sharp vs
     * 88.0 s / 5.4 GB whole — the old 262144 gate sent exactly that
     * regime to the whole path, a measured 12× loss), and the walls

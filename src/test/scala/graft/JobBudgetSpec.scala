@@ -57,4 +57,19 @@ class JobBudgetSpec extends SparkSpec {
     val jobs = warmConstructionJobs("q84_pagerank")
     assert(jobs <= 16, s"q84 construction ran $jobs jobs")
   }
+
+  test("q93 k-means cells: a warm construction runs at most 6 jobs") {
+    val jobs = warmConstructionJobs("q93_kmeans_cells")
+    assert(jobs <= 6, s"q93 construction ran $jobs jobs")
+  }
+
+  test("q98 langid: a warm construction runs at most 6 jobs") {
+    val jobs = warmConstructionJobs("q98_langid_trained")
+    assert(jobs <= 6, s"q98 construction ran $jobs jobs")
+  }
+
+  test("q101 retroactive sweep: a warm construction runs at most 26 jobs") {
+    val jobs = warmConstructionJobs("q101_retroactive_sweep")
+    assert(jobs <= 26, s"q101 construction ran $jobs jobs")
+  }
 }

@@ -126,4 +126,17 @@ class EventTimeSpec extends SparkSpec {
     assert(r.getLong(0) > 1500000000L * 1000000000L &&
       r.getLong(1) < 2000000000L * 1000000000L)
   }
+
+  test("readNanos restores the caller's nanosAsLong setting") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      writeRead(TimestampNTZType)
+      assert(spark.conf.get(key) === "true")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

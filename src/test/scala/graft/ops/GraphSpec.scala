@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -79,5 +81,54 @@ class GraphSpec extends SparkSpec {
       s"the null node is ranked first: ${ranked.toSeq}")
     assert(!ranked.exists(r => !r.isNullAt(0) && r.getLong(0) == 0L),
       "a null endpoint must never read as node 0")
+  }
+
+  test("past-gate checkpoints leave the session's AQE setting alone: " +
+    "every job of a gate-0 pageRank and dupClusters sees it unchanged") {
+    val key = "spark.sql.adaptive.enabled"
+    val tag = "graft.aqeScope"
+    val sc = spark.sparkContext
+    val before = spark.conf.getOption(key)
+    // set explicitly, so SQL jobs carry it in their local properties
+    spark.conf.set(key, "true")
+    val seen = new ConcurrentLinkedQueue[String]
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty(tag)) match {
+          case Some("call") => seen.add(String.valueOf(props.get.getProperty(key)))
+          case Some("drained") => drained = true
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)).toDF("src", "dst")
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+      sc.setLocalProperty(tag, "call")
+      Graph.pageRank(edges, iterations = 2, broadcastRanksMaxNodes = 0L)
+        .collect()
+      Dedup.dupClusters(pairs, broadcastLabelsMaxNodes = 0L).collect()
+      sc.setLocalProperty(tag, "drained")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not deliver the marker job")
+      // SQL jobs carry the session's setting; plain RDD jobs carry none
+      val values = seen.toArray.toSeq.map(_.toString)
+      assert(values.contains("true"), s"no SQL job seen: $values")
+      assert(values.forall(v => v == "true" || v == "null"),
+        s"a job ran with $key changed: $values")
+      assert(spark.conf.get(key) === "true")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+      before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
   }
 }

@@ -188,7 +188,7 @@ class RetroactiveSweepSpec extends SparkSpec {
       .select(col("shingle"), col("occ").as("d_occ")).localCheckpoint()
     val slimFirst = Dedup.crossedFromDeltaAgg(prevOcc, dAgg)
       .collect().map(_.getLong(0)).toSet
-    val tagged = Dedup.taggedCrossed(prevOcc, deltaOcc, 2, 0)
+    val tagged = Dedup.taggedCrossed(prevOcc, deltaOcc, 2)
       .collect().map(_.getLong(0)).toSet
     assert(slimFirst === tagged)
     assert(slimFirst === crossed.collect().map(_.getLong(0)).toSet)
